@@ -439,17 +439,19 @@ class HttpPollingClient:
 
     # -- request construction -------------------------------------------------
 
-    def build_request(self, key_values: Mapping[str, Any]) -> HttpRequestSpec:
-        query_info = self.query_creator(key_values)
+    def _headers(self) -> Dict[str, str]:
+        """Configured headers after the auth preprocessors ran."""
         raw_headers = dict(self.options.headers)
         if self._seed_auth_header:
             raw_headers.setdefault(AUTHORIZATION, "")
-        headers = preprocess_headers(raw_headers, self._preprocessors)
+        return preprocess_headers(raw_headers, self._preprocessors)
+
+    def build_request(self, key_values: Mapping[str, Any]) -> HttpRequestSpec:
         return build_lookup_request(
             method=self.options.method,
             url=self.url,
-            query_info=query_info,
-            headers=headers,
+            query_info=self.query_creator(key_values),
+            headers=self._headers(),
         )
 
     # -- response decode -------------------------------------------------------
@@ -617,8 +619,12 @@ class HttpPollingClient:
                 breaker.record_failure()
         return (spec, response, None)
 
-    def publish(self, exchange: Tuple) -> HttpLookupResult:
-        """Classify + decode phase (CPU-bound); fires the R12 callback."""
+    def _classify(self, exchange: Tuple, decode) -> HttpLookupResult:
+        """Classify an exchange and decode its body with ``decode``; fires
+        the R12 callback. Shared by :meth:`publish` and :meth:`publish_multi`:
+        a transport failure, an ignored code, an error status or an
+        undecodable body yields a non-SUCCESS result (or raises, with
+        continue-on-error off)."""
         spec, response, failure = exchange
         if failure is not None:
             message, status_code = failure
@@ -645,7 +651,7 @@ class HttpPollingClient:
                 headers=headers,
             )
         try:
-            rows = self._decode(response.body)
+            rows = decode(response.body)
         except (ValueError, UnicodeDecodeError) as err:
             return self._on_failure(
                 HttpCompletionState.UNABLE_TO_DESERIALIZE_RESPONSE,
@@ -660,35 +666,39 @@ class HttpPollingClient:
             completion_state=HttpCompletionState.SUCCESS,
         )
 
+    def publish(self, exchange: Tuple) -> HttpLookupResult:
+        """Classify + decode phase (CPU-bound); fires the R12 callback."""
+        return self._classify(exchange, self._decode)
+
     def pull(self, key_values: Mapping[str, Any]) -> HttpLookupResult:
         """One lookup: returns rows + metadata, or raises when the policy
         says fail (continue-on-error off — reference
         ``JavaNetHttpPollingClient.java:166-199``)."""
         return self.publish(self.send(key_values))
 
-    def pull_conditional(
-        self,
-        key_values: Mapping[str, Any],
-        etag: str,
-        cached_result: "HttpLookupResult",
-    ) -> "HttpLookupResult":
-        """Conditional lookup (beyond-reference): the same request with
-        ``If-None-Match: <etag>``. A 304 revalidates ``cached_result``
-        without re-downloading the body (the caller refreshes its cache
-        TTL); any other status flows through the normal classify/decode
-        path and replaces the entry. 304 counts as success for the
-        circuit breaker — the endpoint answered exactly as asked."""
+    # -- conditional lookup (beyond-reference ETag revalidation) ---------------
+
+    def send_conditional(self, key_values: Mapping[str, Any], etag: str) -> Tuple:
+        """Network phase of a conditional lookup: the same request with
+        ``If-None-Match: <etag>``. 304 counts as success for the circuit
+        breaker — the endpoint answered exactly as asked."""
         base = self.build_request(key_values)
-        headers = dict(base.headers)
-        headers["If-None-Match"] = etag
         spec = HttpRequestSpec(
-            method=base.method, url=base.url, headers=headers, body=base.body
+            method=base.method, url=base.url,
+            headers={**base.headers, "If-None-Match": etag}, body=base.body,
         )
-        exchange = self._exchange(spec, also_success=(304,))
-        sent_spec, response, failure = exchange
-        if failure is None and response is not None and response.status == 304:
+        return self._exchange(spec, also_success=(304,))
+
+    def publish_conditional(
+        self, exchange: Tuple, cached_result: HttpLookupResult
+    ) -> HttpLookupResult:
+        """A 304 revalidates ``cached_result`` without re-downloading the
+        body (the caller refreshes its cache TTL); any other outcome flows
+        through :meth:`publish` and replaces the entry."""
+        spec, response, failure = exchange
+        if failure is None and response.status == 304:
             if self.on_response is not None:
-                self.on_response(sent_spec, response)
+                self.on_response(spec, response)
             return cached_result
         return self.publish(exchange)
 
@@ -702,10 +712,6 @@ class HttpPollingClient:
         per-key path."""
         import json as _json
 
-        raw_headers = dict(self.options.headers)
-        if self._seed_auth_header:
-            raw_headers.setdefault(AUTHORIZATION, "")
-        headers = preprocess_headers(raw_headers, self._preprocessors)
         method = self.options.method.upper()
         try:
             spec = build_lookup_request(
@@ -716,13 +722,13 @@ class HttpPollingClient:
                         [dict(kv) for kv in batch_key_values]
                     )
                 ),
-                headers=headers,
+                headers=self._headers(),
             )
         except KeyError as err:
             # a {{placeholder}} URL template has no batch-level value —
             # multi-key batching sends keys in the body, so templated URLs
             # are incompatible with it; surface a failure result instead
-            # of crashing the task out of pull_multi
+            # of crashing the task
             return (None, None, (
                 f"batch lookup cannot resolve URL template {err}: multi-key "
                 "batching (http.source.lookup.request.batch.size) is "
@@ -731,13 +737,21 @@ class HttpPollingClient:
             ))
         return self._exchange(spec)
 
+    def _decode_batch(self, body: bytes) -> List[Mapping[str, Any]]:
+        payload = self._decoder(body) if body.strip() else []
+        if not isinstance(payload, list):
+            raise ValueError(
+                "batch lookup expects an array response "
+                "(one result object per matched key)"
+            )
+        return payload
+
     def publish_multi(
         self,
         exchange: Tuple,
         batch_key_values: List[Mapping[str, Any]],
         key_names: List[str],
         key_coercers: Optional[List] = None,
-        abandoned=None,
     ) -> List[HttpLookupResult]:
         """Classify + decode for a batch exchange, fanned back out per key:
         the response is a JSON array of result objects each carrying its
@@ -753,62 +767,10 @@ class HttpPollingClient:
         ``"42"`` for an int key 42 still enriches — the per-key path gets
         this for free from schema decoding; the batch match must apply the
         same types or silently return empty results for every key."""
-        spec, response, failure = exchange
-        n = len(batch_key_values)
-        # `abandoned` (a threading.Event) marks a chunk whose caller
-        # already reported it as timed out and discarded this result: a
-        # straggler thread that raced past the caller-side check must
-        # fire NO observers and NO failure accounting. Re-checked here —
-        # immediately before the first side effect — so the double-fire
-        # window shrinks from "whole classify+decode phase" to the
-        # instants between these checks and the calls they guard (an
-        # unavoidable residue short of a lock around every observer).
-        if abandoned is not None and abandoned.is_set():
-            return []
-        if failure is not None:
-            message, status_code = failure
-            base = self._on_failure(
-                HttpCompletionState.EXCEPTION, message, status_code=status_code
-            )
-            return [base] * n
-        if self.on_response is not None:
-            if abandoned is not None and abandoned.is_set():
-                return []
-            self.on_response(spec, response)
-        headers = response.header_map()
-        if response.status in self.ignored_codes:
-            base = HttpLookupResult(
-                rows=(),
-                status_code=response.status,
-                headers=headers,
-                completion_state=HttpCompletionState.IGNORE_STATUS_CODE,
-            )
-            return [base] * n
-        if not self.checker.is_successful(response.status):
-            base = self._on_failure(
-                HttpCompletionState.HTTP_ERROR_STATUS,
-                f"HTTP error status {response.status}",
-                status_code=response.status,
-                headers=headers,
-            )
-            return [base] * n
-        try:
-            payload = (
-                self._decoder(response.body) if response.body.strip() else []
-            )
-            if not isinstance(payload, list):
-                raise ValueError(
-                    "batch lookup expects an array response "
-                    "(one result object per matched key)"
-                )
-        except (ValueError, UnicodeDecodeError) as err:
-            base = self._on_failure(
-                HttpCompletionState.UNABLE_TO_DESERIALIZE_RESPONSE,
-                f"cannot deserialize response: {err}",
-                status_code=response.status,
-                headers=headers,
-            )
-            return [base] * n
+        base = self._classify(exchange, self._decode_batch)
+        if base.completion_state is not HttpCompletionState.SUCCESS:
+            return [base] * len(batch_key_values)
+
         def canon(values) -> Tuple:
             if key_coercers is None:
                 return tuple(values)
@@ -821,7 +783,7 @@ class HttpPollingClient:
             return tuple(out)
 
         grouped: Dict[Tuple, List[Mapping[str, Any]]] = {}
-        for row in payload:
+        for row in base.rows:
             if row is None:
                 continue
             grouped.setdefault(
@@ -832,25 +794,12 @@ class HttpPollingClient:
                 rows=tuple(
                     grouped.get(canon(kv.get(k) for k in key_names), ())
                 ),
-                status_code=response.status,
-                headers=headers,
+                status_code=base.status_code,
+                headers=base.headers,
                 completion_state=HttpCompletionState.SUCCESS,
             )
             for kv in batch_key_values
         ]
-
-    def pull_multi(
-        self,
-        batch_key_values: List[Mapping[str, Any]],
-        key_names: List[str],
-        key_coercers: Optional[List] = None,
-    ) -> List[HttpLookupResult]:
-        """One batch lookup: N distinct keys -> one HTTP request -> one
-        result per key, order-aligned with the input."""
-        return self.publish_multi(
-            self.send_multi(batch_key_values), batch_key_values, key_names,
-            key_coercers,
-        )
 
     def _on_failure(
         self,

@@ -40,6 +40,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from concurrent.futures import TimeoutError as FuturesTimeoutError
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Any, Dict, Iterable, Iterator, List, Mapping, Optional, Sequence, Tuple, Union
 
 import pandas as pd
@@ -336,6 +337,56 @@ def _noop_add(_n: int) -> None:
     pass
 
 
+def _run_jobs(jobs: List[Tuple], opts: HttpLookupOptions) -> List[Tuple]:
+    """Run lookup jobs — ``(send, publish)`` pairs, see
+    :func:`_enrich_pdf` — and concatenate what their publishes return.
+
+    Sync mode (or a single job) runs them inline and in order, the
+    reference's synchronous LookupFunction semantics. asyncPolling sends
+    on the pull pool and publishes on the publish pool
+    (``AsyncHttpTableLookupFunction.java:40-42,94-115``);
+    ``async_buffer_capacity`` caps the sends in flight. ``async_timeout``
+    is ONE whole-batch deadline, taken before the first submit (the
+    reference's table.exec.async-lookup.timeout bounds the complete async
+    operation the same way): a send not done when it lapses is published
+    once as None and its thread is abandoned, so its late response fires
+    no observers and no failure accounting."""
+    if not opts.use_async or len(jobs) <= 1:
+        return [out for send, publish in jobs for out in publish(send())]
+    deadline = (
+        None if opts.async_timeout is None
+        else time.monotonic() + opts.async_timeout
+    )
+
+    def exchange_of(fut):
+        try:
+            return fut.result(
+                timeout=None if deadline is None
+                else max(0.0, deadline - time.monotonic())
+            )
+        except FuturesTimeoutError:
+            fut.cancel()
+            return None
+
+    pull_pool = ThreadPoolExecutor(max_workers=max(1, min(
+        opts.pull_pool_size, opts.async_buffer_capacity, len(jobs),
+    )))
+    publish_pool = ThreadPoolExecutor(max_workers=max(1, opts.publish_pool_size))
+    try:
+        sends = [(publish, pull_pool.submit(send)) for send, publish in jobs]
+        published = [
+            publish_pool.submit(lambda p=publish, f=f: p(exchange_of(f)))
+            for publish, f in sends
+        ]
+        return [out for fut in published for out in fut.result()]
+    finally:
+        # timed-out results are already materialized — don't let pool
+        # teardown block on a hung send (abandoned sockets still die at
+        # request_timeout)
+        publish_pool.shutdown(wait=False, cancel_futures=True)
+        pull_pool.shutdown(wait=False, cancel_futures=True)
+
+
 def _enrich_pdf(
     cfg: "_EnrichConfig",
     client: HttpPollingClient,
@@ -349,10 +400,8 @@ def _enrich_pdf(
     multi-key-batch fetch, then row assembly with emptiness rule, key
     backfill, array multiply and metadata columns. Returns the enriched
     frame (column order = ``cfg.out_col_names``), or ``None`` for an
-    empty batch. Extracted from the round-1..9 ``mapInPandas`` closure
-    verbatim so the SQL UDTF shares it."""
+    empty batch. Shared by the ``mapInPandas`` path and the SQL UDTF."""
     pairs = list(cfg.pairs)
-    pool_size = max(1, cfg.table.options.pull_pool_size)
     probe_col_names = list(cfg.probe_col_names)
     output_lookup_fields = list(cfg.output_lookup_fields)
     lookup_prefix = cfg.lookup_prefix
@@ -377,11 +426,12 @@ def _enrich_pdf(
     for kt in row_keys:
         distinct.setdefault(kt, None)
 
-    # --- cache probe + thread-pooled fetch ----------------------------
+    # --- cache probe ------------------------------------------------------
     to_fetch: List[Tuple] = []
     # (key, etag, stale result) triples for conditional refresh
     to_revalidate: List[Tuple[Tuple, str, HttpLookupResult]] = []
-    batch_size = cfg.table.options.lookup_batch_size
+    opts = cfg.table.options
+    batch_size = opts.lookup_batch_size
     revalidating = (
         cache is not None and cache.config.revalidate
         and not batch_size  # conditional GET is a per-key exchange
@@ -407,10 +457,6 @@ def _enrich_pdf(
             else:
                 to_fetch.append(kt)
 
-    calls_add(
-        (-(-len(to_fetch) // batch_size) if (batch_size and to_fetch)
-         else len(to_fetch)) + len(to_revalidate)
-    )
     hits_add(
         len(distinct) - len(to_fetch) - len(to_revalidate)
     )
@@ -418,68 +464,42 @@ def _enrich_pdf(
     def key_values_of(kt: Tuple) -> Dict[str, Any]:
         return {_leaf_name(lk): v for (_pc, lk), v in zip(pairs, kt)}
 
-    # --- conditional refresh of expired entries (If-None-Match) -------
-    if to_revalidate:
-        if cfg.table.options.use_async and len(to_revalidate) > 1:
-            # pipeline conditional GETs on a pull pool exactly like
-            # the plain-fetch async path — a partition with many
-            # expired ETag'd keys must not serialize round-trips
-            # that a cold fetch would run concurrently. A lapsed
-            # whole-batch deadline degrades to the stale cached
-            # value (the entry stays expired, so the next batch
-            # retries revalidation) instead of stalling the task.
-            opts = cfg.table.options
-            reval_workers = max(
-                1, min(pool_size, len(to_revalidate))
-            )
-            reval_deadline = (
-                None if opts.async_timeout is None
-                else time.monotonic() + opts.async_timeout
-            )
-            reval_pool = ThreadPoolExecutor(max_workers=reval_workers)
-            try:
-                reval_futs = [
-                    (kt, prev, reval_pool.submit(
-                        client.pull_conditional,
-                        key_values_of(kt), etag, prev))
-                    for kt, etag, prev in to_revalidate
-                ]
-                revalidated = []
-                for kt, prev, fut in reval_futs:
-                    try:
-                        result = (
-                            fut.result() if reval_deadline is None
-                            else fut.result(timeout=max(
-                                0.0,
-                                reval_deadline - time.monotonic()))
-                        )
-                    except FuturesTimeoutError:
-                        fut.cancel()
-                        # serve stale WITHOUT refreshing the TTL —
-                        # the entry stays expired so the next batch
-                        # retries the conditional GET
-                        revalidated.append((kt, prev, False))
-                        continue
-                    revalidated.append((kt, result, True))
-            finally:
-                reval_pool.shutdown(wait=False, cancel_futures=True)
-        else:
-            revalidated = [
-                (kt, client.pull_conditional(
-                    key_values_of(kt), etag, prev), True)
-                for kt, etag, prev in to_revalidate
-            ]
-        for kt, result, fresh in revalidated:
-            distinct[kt] = result
-            if fresh and result.completion_state in (
-                HttpCompletionState.SUCCESS,
-            ):
-                if result.rows or cache.config.cache_missing_key:
-                    cache.put(kt, result)  # 304 → same body, fresh TTL
+    def timed_out(what: str) -> Tuple:
+        return (None, None, (
+            f"{what} timed out after {opts.async_timeout}s", None,
+        ))
 
-    if to_fetch and batch_size:
-        # multi-key batch mode: N distinct keys per request; chunks
-        # fetch concurrently on the pull pool under use_async
+    # --- one job per revalidated key, multi-key chunk or fetched key -----
+    # a job is (send, publish): a network thunk returning an exchange, and
+    # a function mapping that exchange — None when the send missed the
+    # async deadline — to (key, result, store_in_cache) triples
+
+    def publish_revalidation(kt, stale, exchange):
+        if exchange is None:
+            # serve stale WITHOUT refreshing the TTL — the entry stays
+            # expired so the next batch retries the conditional GET
+            return [(kt, stale, False)]
+        # 304 → same body, fresh TTL
+        return [(kt, client.publish_conditional(exchange, stale), True)]
+
+    def publish_chunk(chunk, kvs, exchange):
+        results = client.publish_multi(
+            exchange or timed_out("async batch lookup"),
+            kvs, leaf_names, key_coercers,
+        )
+        return [(kt, result, True) for kt, result in zip(chunk, results)]
+
+    def publish_key(kt, exchange):
+        result = client.publish(exchange or timed_out("async lookup"))
+        return [(kt, result, True)]
+
+    jobs = [
+        (partial(client.send_conditional, key_values_of(kt), etag),
+         partial(publish_revalidation, kt, stale))
+        for kt, etag, stale in to_revalidate
+    ]
+    if batch_size:
+        # multi-key batch mode: N distinct keys per request
         leaf_names = [_leaf_name(lk) for _, lk in pairs]
         # canonicalize response/request key values through the
         # DECLARED schema types before matching (the per-key path
@@ -488,154 +508,27 @@ def _enrich_pdf(
         key_coercers = [
             _key_coercer(cfg.table.schema, lk) for _, lk in pairs
         ]
-        chunks = [
-            to_fetch[i : i + batch_size]
-            for i in range(0, len(to_fetch), batch_size)
+        for i in range(0, len(to_fetch), batch_size):
+            chunk = to_fetch[i : i + batch_size]
+            kvs = [key_values_of(kt) for kt in chunk]
+            jobs.append((partial(client.send_multi, kvs),
+                         partial(publish_chunk, chunk, kvs)))
+    else:
+        _maybe_advise_batch_lookup(len(to_fetch))
+        jobs += [
+            (partial(client.send, key_values_of(kt)), partial(publish_key, kt))
+            for kt in to_fetch
         ]
 
-        def fetch_chunk(
-            chunk: List[Tuple],
-            abandoned: Optional[threading.Event] = None,
-        ) -> List[Tuple]:
-            kvs = [key_values_of(kt) for kt in chunk]
-            exchange = client.send_multi(kvs)
-            if abandoned is not None and abandoned.is_set():
-                # the caller already reported this chunk as timed
-                # out and discarded our result — skip the publish
-                # phase so the dead thread fires NO on_response
-                # observers and NO failure accounting (re-checked
-                # inside publish_multi right before its first
-                # side effect, closing the race where the caller
-                # abandons between this check and the publish)
-                return []
-            return list(
-                zip(chunk,
-                    client.publish_multi(
-                        exchange, kvs, leaf_names, key_coercers,
-                        abandoned=abandoned))
-            )
-
-        if cfg.table.options.use_async and len(chunks) > 1:
-            # async_timeout here is a WHOLE-BATCH deadline (the
-            # reference's table.exec.async-lookup.timeout bounds
-            # the complete async operation the same way): once it
-            # lapses, every not-yet-joined chunk is reported as
-            # timed out — a hung endpoint yields timeout results
-            # instead of stalling the task forever
-            opts = cfg.table.options
-            workers = max(1, min(pool_size, len(chunks)))
-            deadline = (
-                None if opts.async_timeout is None
-                else time.monotonic() + opts.async_timeout
-            )
-            pool = ThreadPoolExecutor(max_workers=workers)
-            try:
-                futs = [
-                    (chunk, ev, pool.submit(fetch_chunk, chunk, ev))
-                    for chunk in chunks
-                    for ev in (threading.Event(),)
-                ]
-                fetched = []
-                for chunk, ev, fut in futs:
-                    try:
-                        part = (
-                            fut.result() if deadline is None
-                            else fut.result(timeout=max(
-                                0.0, deadline - time.monotonic()))
-                        )
-                    except FuturesTimeoutError:
-                        ev.set()  # in-flight thread: publish no more
-                        fut.cancel()
-                        kvs = [key_values_of(kt) for kt in chunk]
-                        part = list(zip(chunk, client.publish_multi(
-                            (None, None, (
-                                f"async batch lookup timed out after "
-                                f"{opts.async_timeout}s", None,
-                            )),
-                            kvs, leaf_names,
-                        )))
-                    fetched.extend(part)
-            finally:
-                # don't block on hung in-flight requests: results
-                # are already materialized at the deadline; the
-                # abandoned sockets still die at request_timeout
-                pool.shutdown(wait=False, cancel_futures=True)
-        else:
-            fetched = [
-                pair for chunk in chunks for pair in fetch_chunk(chunk)
-            ]
-        for kt, result in fetched:
-            distinct[kt] = result
-            if cache is not None and result.completion_state in (
-                HttpCompletionState.SUCCESS,
-            ):
-                if result.rows or cache.config.cache_missing_key:
-                    cache.put(kt, result)
-    elif to_fetch:
-        _maybe_advise_batch_lookup(len(to_fetch))
-        if not cfg.table.options.use_async or len(to_fetch) == 1:
-            # sync mode: strictly sequential per-key firing, the
-            # reference's synchronous LookupFunction semantics
-            fetched = [
-                (kt, client.pull(key_values_of(kt))) for kt in to_fetch
-            ]
-        else:
-            # asyncPolling: network phase pipelined on the pull pool,
-            # classify/decode published on the publish pool
-            # (AsyncHttpTableLookupFunction.java:40-42,94-115).
-            # buffer-capacity caps in-flight requests; the timeout is
-            # a per-request deadline from submission
-            # (table.exec.async-lookup.*, T2)
-            opts = cfg.table.options
-            fetch_workers = max(
-                1, min(pool_size, opts.async_buffer_capacity)
-            )
-            deadline = (
-                None if opts.async_timeout is None
-                else time.monotonic() + opts.async_timeout
-            )
-
-            def exchange_of(fut):
-                if deadline is None:
-                    return fut.result()
-                try:
-                    return fut.result(
-                        timeout=max(0.0, deadline - time.monotonic())
-                    )
-                except FuturesTimeoutError:
-                    fut.cancel()
-                    return (None, None, (
-                        f"async lookup timed out after "
-                        f"{opts.async_timeout}s", None,
-                    ))
-
-            publish_size = max(1, opts.publish_pool_size)
-            pull_pool = ThreadPoolExecutor(max_workers=fetch_workers)
-            publish_pool = ThreadPoolExecutor(max_workers=publish_size)
-            try:
-                send_futs = [
-                    (kt, pull_pool.submit(client.send, key_values_of(kt)))
-                    for kt in to_fetch
-                ]
-                pub_futs = [
-                    (kt, publish_pool.submit(
-                        lambda f=f: client.publish(exchange_of(f))))
-                    for kt, f in send_futs
-                ]
-                fetched = [(kt, pf.result()) for kt, pf in pub_futs]
-            finally:
-                # timeout results are already materialized — don't
-                # let pool teardown block on a hung send future
-                # (abandoned sockets still die at request_timeout)
-                publish_pool.shutdown(wait=False, cancel_futures=True)
-                pull_pool.shutdown(wait=False, cancel_futures=True)
-        for kt, result in fetched:
-            distinct[kt] = result
-            if cache is not None and result.completion_state in (
-                HttpCompletionState.SUCCESS,
-            ):
-                if result.rows or cache.config.cache_missing_key:
-                    cache.put(kt, result)
+    calls_add(len(jobs))
+    for kt, result, store in _run_jobs(jobs, opts):
+        distinct[kt] = result
+        if (
+            store and cache is not None
+            and result.completion_state is HttpCompletionState.SUCCESS
+            and (result.rows or cache.config.cache_missing_key)
+        ):
+            cache.put(kt, result)
 
     # --- assemble output rows -----------------------------------------
     out_cols: Dict[str, List[Any]] = {name: [] for name in list(cfg.out_col_names)}

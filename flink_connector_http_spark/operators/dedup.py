@@ -3655,17 +3655,25 @@ def _exsub_spans(
     )
     if b_min_doc_id is not None:
         matches = matches.filter(F.col("b_id") >= b_min_doc_id)
-    # islands window keyed by the PAIR, not (pair, diag) — round 16
-    # (guide §2.4): every consumer aggregates per pair (the pair report,
-    # the incremental per-pair pre-rollup) or per doc, so partitioning
-    # the run grouping by (a_id, b_id) lets those pair-grain aggregates
-    # ride this exchange instead of re-shuffling the match rows a second
-    # time. Ordering by (diag, pa), a run boundary is a diag change or a
-    # pa gap (pa values are distinct within a diag: the anchor at a
-    # given position is unique after the first-position cap, so the lag
-    # comparison has no tie ambiguity); the cumulative flag sum
-    # reproduces exactly the runs the old per-diag pa - row_number()
-    # construction produced.
+    return _exsub_run_groups(matches)
+
+
+def _exsub_run_groups(matches):
+    """Match rows ``(a_id, b_id, pa, diag)`` → maximal spans
+    ``(a_id, b_id, diag, sa, ea)``; shared by :func:`_exsub_spans` and
+    :func:`stream_incremental_exsub_ingest`, which must stay in lockstep.
+
+    The islands window is keyed by the PAIR, not (pair, diag): every
+    consumer aggregates per pair (the pair report, the incremental
+    per-pair pre-rollup) or per doc, so partitioning the run grouping by
+    (a_id, b_id) lets those pair-grain aggregates ride this exchange
+    instead of re-shuffling the match rows a second time. Ordering by
+    (diag, pa), a run boundary is a diag change or a pa gap (pa values
+    are distinct within a diag: the anchor at a given position is unique
+    after the first-position cap, so the lag comparison has no tie
+    ambiguity); the cumulative flag sum numbers the runs."""
+    from pyspark.sql.window import Window
+
     w = Window.partitionBy("a_id", "b_id").orderBy("diag", "pa")
     prev_diag = F.lag("diag").over(w)
     prev_pa = F.lag("pa").over(w)
@@ -4259,28 +4267,5 @@ def stream_incremental_exsub_ingest(
         .filter((F.col("nd") >= 2) & (F.col("nd") <= EXSUB_DF_MAX))
         .select("h")
     )
-    from pyspark.sql.window import Window
-
     kept = spark.read.parquet(matches_dir).join(final_ok, "h").drop("h")
-    # same (a_id, b_id)-keyed islands window as _exsub_spans (round 16):
-    # the run grouping and the per-pair rollup share one exchange
-    w = Window.partitionBy("a_id", "b_id").orderBy("diag", "pa")
-    prev_diag = F.lag("diag").over(w)
-    prev_pa = F.lag("pa").over(w)
-    runs = kept.withColumn(
-        "nr",
-        F.when(
-            prev_diag.isNull()
-            | (F.col("diag") != prev_diag)
-            | (F.col("pa") != prev_pa + 1),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    ).withColumn(
-        "grp",
-        F.sum("nr").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    spans = runs.groupBy("a_id", "b_id", "diag", "grp").agg(
-        F.min("pa").alias("sa"),
-        (F.max("pa") + F.lit(EXSUB_K - 1)).alias("ea"),
-    ).select("a_id", "b_id", "diag", "sa", "ea")
-    return _exsub_incremental_rollup(spans)
+    return _exsub_incremental_rollup(_exsub_run_groups(kept))

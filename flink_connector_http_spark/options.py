@@ -222,13 +222,13 @@ class HttpLookupOptions:
     # AsyncHttpTableLookupFunction.java:40-42,94-115)
     use_async: bool = False
     # host-engine async knobs (Flink table.exec.async-lookup.*): capacity
-    # caps concurrent in-flight lookups (effective fetch concurrency =
-    # min(pull_pool_size, async_buffer_capacity)); timeout is the deadline
-    # per async request measured from submission — on expiry the lookup
-    # fails (or yields an EXCEPTION-state row under continue_on_error).
-    # On the multi-key batch path the timeout is a WHOLE-BATCH deadline:
-    # all chunks share it, and chunks not joined when it lapses are
-    # reported timed out even if their response lands moments later
+    # caps concurrent in-flight requests on every async path (effective
+    # fetch concurrency = min(pull_pool_size, async_buffer_capacity)).
+    # The timeout is ONE whole-batch deadline per probe batch, taken
+    # before the first request is submitted: every request not answered
+    # when it lapses fails (or yields an EXCEPTION-state row under
+    # continue_on_error; an expired ETag revalidation serves the stale
+    # cached value instead)
     async_buffer_capacity: int = 100                  # Flink default
     async_timeout: Optional[float] = None             # seconds; None = no deadline
     result_type: str = "single-value"                 # or "array"

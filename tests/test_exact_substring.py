@@ -186,3 +186,41 @@ def test_plain_shared_run_full_length(spark, plain_dir):
     assert r["n_spans"] == 1
     assert r["max_span_chars"] == 40
     assert r["shared_chars"] == 40
+
+
+@pytest.fixture(scope="module")
+def three_docs_one_run_dir(spark, tmp_path_factory):
+    """Three docs sharing one 40-char non-repeating run at the same
+    offset: every doc sits in two pairs, so two DISTINCT pairs emit the
+    identical (doc_id, s, e) interval for it."""
+    import string
+
+    run = (string.ascii_letters + string.digits)[:40]
+    texts = ["HEAD0" + run + "X0", "head1" + run + "y1", "hEaD2" + run + "Z2"]
+    return _write_docs(spark, tmp_path_factory.mktemp("exsub_three"), texts)
+
+
+def test_duplicate_intervals_from_distinct_pairs_merge_once(
+    spark, three_docs_one_run_dir
+):
+    # the interval union keeps no DISTINCT over interval rows; duplicate
+    # rows must neither add ranges nor add cut characters
+    spans = _exsub_spans(spark, three_docs_one_run_dir).collect()
+    assert len({(r["a_id"], r["b_id"]) for r in spans}) == 3
+    intervals = [(r["a_id"], r["sa"], r["ea"]) for r in spans] + [
+        (r["b_id"], r["sa"] - r["diag"], r["ea"] - r["diag"]) for r in spans
+    ]
+    assert len(intervals) == 6 and len(set(intervals)) == 3
+
+    rows = dedup_exact_substring_removelist(
+        spark, three_docs_one_run_dir
+    ).collect()
+    assert sorted(
+        (r["doc_id"], r["n_ranges"], r["chars_flagged"]) for r in rows
+    ) == [(0, 1, 40), (1, 1, 40), (2, 1, 40)]
+    (stats,) = dedup_exact_substring_clean_stats(
+        spark, three_docs_one_run_dir
+    ).collect()
+    assert stats["docs_flagged"] == 3
+    assert stats["chars_cut"] == 120
+

@@ -263,7 +263,10 @@ class TestAsyncKnobs:
             assert row["http-completion-state"] == "EXCEPTION"
             assert "timed out" in row["error-string"]
 
-    def test_async_buffer_capacity_bounds_inflight(self, spark, stub_server):
+    @pytest.mark.parametrize("batch_size", [None, 1], ids=["per_key", "batch"])
+    def test_async_buffer_capacity_bounds_inflight(
+        self, spark, stub_server, batch_size
+    ):
         import threading as _threading
 
         active = {"now": 0, "max": 0}
@@ -277,6 +280,10 @@ class TestAsyncKnobs:
             _time.sleep(0.05)
             with lock:
                 active["now"] -= 1
+            if req.method == "POST":  # multi-key batch: JSON key array
+                rows = [{"n_nationkey": k["n_nationkey"], "n_name": "Y"}
+                        for k in req.json()]
+                return StubResponse(status=200, body=json.dumps(rows).encode())
             key = req.query.get("n_nationkey", ["0"])[0]
             return StubResponse(
                 status=200,
@@ -291,6 +298,7 @@ class TestAsyncKnobs:
             options=HttpLookupOptions(
                 method="GET", use_async=True,
                 pull_pool_size=8, async_buffer_capacity=2,
+                lookup_batch_size=batch_size,
             ),
         )
         out = http_lookup_join(probe, table, on={"key": "n_nationkey"}).collect()

@@ -650,14 +650,11 @@ def test_circuit_breaker_short_circuits_after_threshold(spark, stub_server):
         assert "circuit breaker open" in r["error-string"]
 
 
-def test_publish_multi_rechecks_abandoned_event_before_side_effects():
-    """Round-5 ADVICE residual race: the caller can abandon a chunk
-    BETWEEN fetch_chunk's check and the publish phase. publish_multi now
-    re-checks the event itself — at entry and again right before firing
-    on_response — so a straggler that raced past the caller-side check
-    still fires no observers and no failure accounting."""
-    import threading
-
+def test_publish_multi_fires_one_callback_per_chunk():
+    """One batch exchange published once fires the request callback
+    exactly once, however many keys it fans back out to. (A chunk that
+    missed the async deadline is never published at all — pinned end to
+    end by test_batch_lookup_abandoned_chunk_fires_no_observers.)"""
     from flink_connector_http_spark.client import (
         HttpPollingClient,
         HttpResponse,
@@ -672,42 +669,9 @@ def test_publish_multi_rechecks_abandoned_event_before_side_effects():
         ),
     )
     resp = HttpResponse(200, [], b'[{"id": 1, "name": "a"}]')
-    exchange = (object(), resp, None)
-
-    # abandoned before entry: nothing fires, empty result
-    ev = threading.Event()
-    ev.set()
-    assert client.publish_multi(exchange, [{"id": 1}], ["id"],
-                                abandoned=ev) == []
-    assert calls == []
-
-    # abandoned BETWEEN the entry check and on_response (the exact race):
-    # first is_set() poll says alive, second says abandoned
-    class _FlipEvent:
-        def __init__(self):
-            self.polls = 0
-
-        def is_set(self):
-            self.polls += 1
-            return self.polls >= 2
-
-    flip = _FlipEvent()
-    assert client.publish_multi(exchange, [{"id": 1}], ["id"],
-                                abandoned=flip) == []
-    assert calls == []
-    assert flip.polls >= 2
-
-    # failure-path accounting is also suppressed for an abandoned chunk
-    ev2 = threading.Event()
-    ev2.set()
-    fail_exchange = (None, None, ("boom", None))
-    assert client.publish_multi(fail_exchange, [{"id": 1}], ["id"],
-                                abandoned=ev2) == []
-    assert calls == []
-
-    # sanity: a live chunk still publishes and fires exactly one callback
-    out = client.publish_multi(exchange, [{"id": 1}], ["id"])
-    assert len(out) == 1 and out[0].rows
+    out = client.publish_multi((object(), resp, None), [{"id": 1}, {"id": 2}],
+                               ["id"])
+    assert len(out) == 2 and out[0].rows and not out[1].rows
     assert calls == ["fired"]
 
 
@@ -877,6 +841,63 @@ def test_cache_revalidation_pipelines_under_async(spark, stub_server):
         "alice", "alice", "bob", "bob"]
     assert calls["full"] == 2
     assert calls["cond"] == 2 and calls["broken"] == 0
+
+
+def test_revalidation_abandoned_by_deadline_fires_no_observers(
+    spark, stub_server, tmp_path
+):
+    """A conditional GET that misses the whole-batch async deadline is
+    served stale, and its thread is abandoned: when the hung 304 finally
+    lands it must fire NO request callback (the revalidation twin of
+    test_batch_lookup_abandoned_chunk_fires_no_observers)."""
+    import time as _time
+
+    marker = tmp_path / "on_response_calls.txt"
+
+    def responder(request):
+        key = int(request.query["id"][0])
+        if request.headers.get("If-None-Match") == f'"v{key}"':
+            if key == 2:  # the hung revalidation
+                _time.sleep(4.0)
+            return StubResponse(status=304, headers={"ETag": f'"v{key}"'})
+        resp = json_response(CUSTOMERS[key])
+        resp.headers["ETag"] = f'"v{key}"'
+        return resp
+
+    stub_server.stub("/customers-reval-orphan", responder)
+    mpath = str(marker)
+    table = HttpLookupTable(
+        url=stub_server.url("/customers-reval-orphan"),
+        schema=CUSTOMER_SCHEMA,
+        options=HttpLookupOptions(
+            use_async=True,
+            # the fast 304 answers in ms, the hung one in 4 s
+            async_timeout=2.0,
+            continue_on_error=True,
+            request_callback=lambda s, r: open(mpath, "a").write("x"),
+            cache=LookupCacheConfig(
+                max_rows=100, expire_after_write=0.0, revalidate=True,
+            ),
+        ),
+    )
+    # batch 1 (rows 1,2) cold-fetches both keys: 2 callbacks; batch 2
+    # (rows 3,4) revalidates both: key 1's 304 fires 1 callback, key 2's
+    # times out and is served stale
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        df = orders_df(spark, ids=(1, 2, 1, 2)).repartition(1)
+        out = http_lookup_join(
+            df, table, on={"cust_id": "id"},
+            metadata_columns=["http-completion-state"],
+        ).collect()
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert sorted((r.cust_id, r.name) for r in out) == [
+        (1, "alice"), (1, "alice"), (2, "bob"), (2, "bob")]
+    assert all(r["http-completion-state"] == "SUCCESS" for r in out)
+    # let the abandoned revalidation's 304 land and (not) publish
+    _time.sleep(4.5)
+    assert marker.read_text() == "xxx"
 
 
 def test_hedged_lookup_fires_and_wins_on_slow_primary(spark, stub_server):

@@ -81,8 +81,14 @@ def tree_digest(jplan) -> dict:
 
 
 def digest(plan: str) -> dict:
+    """Digest a tree-format plan. All three digests count the same thing
+    as ``exchanges``: a shuffle exchange of any partitioning (hash, range,
+    round-robin) except SinglePartition, which is counted apart;
+    broadcast and reused exchanges are neither."""
     return {
-        "exchanges": len(re.findall(r"\bExchange hashpartitioning", plan)),
+        "exchanges": len(
+            re.findall(r"\bExchange (?!SinglePartition\b)\w", plan)
+        ),
         "single_partition_exchanges": len(
             re.findall(r"\bExchange SinglePartition", plan)
         ),
@@ -94,7 +100,9 @@ def digest(plan: str) -> dict:
         # tree-format plans mark codegen'd operators with a "*(N)" prefix
         "codegen_stages": len(set(re.findall(r"\*\((\d+)\)", plan))),
         "pushed_filters": len(re.findall(r"PushedFilters: \[[^\]]", plan)),
-        "python_stages": len(re.findall(r"(?:MapInPandas|ArrowEvalPython|FlatMapGroupsInPandas)", plan)),
+        "python_stages": len(re.findall(
+            r"(?:MapInPandas|ArrowEvalPython"
+            r"|FlatMapGroupsInPandas|BatchEvalPython)", plan)),
     }
 
 
@@ -112,7 +120,7 @@ def digest_formatted(txt: str) -> dict:
     ``ReusedExchange``/``BroadcastExchange`` don't match the Exchange
     pattern by construction."""
     ex_args = re.findall(
-        r"\(\d+\) Exchange\nInput[^\n]*\nArguments: (\w+)", txt)
+        r"\(\d+\) Exchange\n(?:[^\n]+\n)*?Arguments: (\w+)", txt)
     return {
         "exchanges": sum(1 for a in ex_args if a != "SinglePartition"),
         "single_partition_exchanges": sum(
@@ -163,7 +171,8 @@ def main() -> None:
         "# PLANS — physical-plan audit of the bench queries",
         "",
         f"Auto-generated by `tools/plan_audit.py` at `{args.sf}`.",
-        "Digest heuristics: `exchanges` counts hash-partitioning shuffles;",
+        "Digest heuristics: `exchanges` counts shuffles of any partitioning",
+        "but SinglePartition (counted apart);",
         "`pushed_filters` counts parquet scans with a non-empty PushedFilters",
         "list; `python_stages` counts Arrow/Pandas stages (the deliberate",
         "Python islands: HTTP I/O and binary decode only).",
