@@ -1,13 +1,16 @@
 """HTTP lookup table + lookup-join enrichment operator (the flagship).
 
 Re-expresses the reference's lookup source (SURVEY §2.1 S1-S3, §2.3 J1-J3)
-Spark-first: one narrow ``mapInPandas`` stage — no shuffle, exactly like the
+Spark-first: one narrow ``mapInArrow`` stage — no shuffle, exactly like the
 reference's lookup join stays shuffle-free — with per-Arrow-batch **distinct
 key** extraction (an optimization the reference lacks: it fires one HTTP call
 per probe row, cache aside), a thread-pooled client (reference's async pools,
 ``AsyncHttpTableLookupFunction.java:40-42,94-115``), and a per-executor
 LRU+TTL cache (reference ``DefaultLookupCache`` wiring,
-``HttpLookupTableSourceFactory.java:241-250``).
+``HttpLookupTableSourceFactory.java:241-250``). Each distinct key's result
+is coerced once into per-column Arrow arrays, and ``take`` gathers them
+into probe order: nested records are shredded to columns once per key,
+never per probe row.
 
 Semantics parity (reference ``HttpTableLookupFunction.java:102-197`` and
 ``docs/.../table/http.md:203-243,701-746``):
@@ -43,16 +46,19 @@ from dataclasses import dataclass, field
 from functools import partial
 from typing import Any, Dict, Iterable, Iterator, List, Mapping, Optional, Sequence, Tuple, Union
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .cache import LookupCacheConfig, LruTtlCache, shared_cache
 from .client import HttpPollingClient
 from .options import HttpLookupOptions
 from .types import (
     METADATA_COLUMN_NAMES,
+    METADATA_FIELDS,
     HttpCompletionState,
     HttpLookupResult,
     metadata_schema,
@@ -208,6 +214,31 @@ def _coerce(value: Any, data_type: T.DataType) -> Any:
     return value
 
 
+def _fit_decimals(value: Any, data_type: T.DataType) -> Any:
+    """Cut every decimal in a coerced value to its declared scale, toward
+    zero, as Spark's unsafe pandas-to-Arrow rescale does (``"-1.239"`` →
+    ``DECIMAL(10,2)`` ``-1.23``); ``pa.array`` refuses a lossy rescale."""
+    if value is None:
+        return None
+    if isinstance(data_type, T.DecimalType):
+        return value.quantize(
+            decimal.Decimal(1).scaleb(-data_type.scale),
+            rounding=decimal.ROUND_DOWN, context=_DECIMAL_CONTEXT,
+        )
+    if isinstance(data_type, T.StructType):
+        return {f.name: _fit_decimals(value.get(f.name), f.dataType)
+                for f in data_type.fields}
+    if isinstance(data_type, T.ArrayType):
+        return [_fit_decimals(v, data_type.elementType) for v in value]
+    if isinstance(data_type, T.MapType):
+        return {k: _fit_decimals(v, data_type.valueType) for k, v in value.items()}
+    return value
+
+
+#: wide enough for any DECIMAL(38, s) digit string
+_DECIMAL_CONTEXT = decimal.Context(prec=76)
+
+
 # --- key handling --------------------------------------------------------------
 
 def _normalize_on(
@@ -318,7 +349,7 @@ def _validate_select_paths(schema: T.StructType, select: Sequence[str]) -> None:
 @dataclass(frozen=True)
 class _EnrichConfig:
     """Everything the per-batch enrichment needs, picklable, built once on
-    the driver. Shared by the ``mapInPandas`` path (:func:`http_lookup_join`)
+    the driver. Shared by the ``mapInArrow`` path (:func:`http_lookup_join`)
     and the SQL UDTF surface (``sqlfn.HttpLookupUdtf``), so both run the
     identical vectorized distinct-key/cache/async/batch machinery."""
 
@@ -327,7 +358,6 @@ class _EnrichConfig:
     probe_col_names: Tuple[str, ...]
     output_lookup_fields: Tuple[T.StructField, ...]
     out_col_names: Tuple[str, ...]
-    lookup_prefix: str
     key_lookup_names: Tuple[str, ...]
     meta_names: Tuple[str, ...]
     emit_on_empty: bool
@@ -391,40 +421,32 @@ def _enrich_pdf(
     cfg: "_EnrichConfig",
     client: HttpPollingClient,
     cache: Optional[LruTtlCache],
-    pdf: pd.DataFrame,
+    batch: pa.RecordBatch,
     calls_add=_noop_add,
     hits_add=_noop_add,
-) -> Optional[pd.DataFrame]:
-    """Enrich ONE probe batch (pandas DataFrame) with HTTP lookups:
+) -> Optional[pa.RecordBatch]:
+    """Enrich ONE probe batch (Arrow ``RecordBatch``) with HTTP lookups:
     distinct-key dedup, cache probe + ETag revalidation, thread-pooled /
-    multi-key-batch fetch, then row assembly with emptiness rule, key
-    backfill, array multiply and metadata columns. Returns the enriched
-    frame (column order = ``cfg.out_col_names``), or ``None`` for an
-    empty batch. Shared by the ``mapInPandas`` path and the SQL UDTF."""
+    multi-key-batch fetch, then assembly (:func:`_assemble`) with the
+    emptiness rule, key backfill, array multiply and metadata columns.
+    Returns the enriched batch (column order = ``cfg.out_col_names``), or
+    ``None`` for an empty batch. Shared by the ``mapInArrow`` path and
+    the SQL UDTF."""
     pairs = list(cfg.pairs)
-    probe_col_names = list(cfg.probe_col_names)
-    output_lookup_fields = list(cfg.output_lookup_fields)
-    lookup_prefix = cfg.lookup_prefix
-    key_lookup_names = list(cfg.key_lookup_names)
-    meta_names = list(cfg.meta_names)
-    meta_fields = bool(cfg.meta_names)
-    emit_on_empty = cfg.emit_on_empty
-    n = len(pdf)
-    if n == 0:
+    if batch.num_rows == 0:
         return None
     # --- distinct-key extraction (batch-level dedup) ------------------
     key_cols: List[List[Any]] = []
     for probe_col, _lk in pairs:
         path = probe_col.split(".")
-        root = pdf[path[0]]
+        root = batch.column(path[0]).to_pylist()
         if len(path) == 1:
-            key_cols.append(root.tolist())
+            key_cols.append(root)
         else:
             key_cols.append([_extract_path(v, path[1:]) for v in root])
-    row_keys: List[Tuple] = list(zip(*key_cols))
-    distinct: Dict[Tuple, Optional[HttpLookupResult]] = {}
-    for kt in row_keys:
-        distinct.setdefault(kt, None)
+    codes: Dict[Tuple, int] = {}
+    row_codes = [codes.setdefault(kt, len(codes)) for kt in zip(*key_cols)]
+    distinct: Dict[Tuple, Optional[HttpLookupResult]] = dict.fromkeys(codes)
 
     # --- cache probe ------------------------------------------------------
     to_fetch: List[Tuple] = []
@@ -530,47 +552,72 @@ def _enrich_pdf(
         ):
             cache.put(kt, result)
 
-    # --- assemble output rows -----------------------------------------
-    out_cols: Dict[str, List[Any]] = {name: [] for name in list(cfg.out_col_names)}
-    probe_values = {name: pdf[name].tolist() for name in probe_col_names}
+    return _assemble(cfg, batch, row_codes, distinct)
 
-    for i in range(n):
-        result = distinct[row_keys[i]]
-        assert result is not None
+
+def _assemble(
+    cfg: "_EnrichConfig",
+    batch: pa.RecordBatch,
+    row_codes: List[int],
+    results: Dict[Tuple, HttpLookupResult],
+) -> pa.RecordBatch:
+    """Join one probe batch to its lookup results. Each distinct key's
+    rows are coerced once (key backfill and metadata applied per key)
+    into a block of one array per output column; the emptiness rule, the
+    ``how="left"`` null row and the array multiply only decide how many
+    rows a key's block holds. One ``(probe_idx, result_idx)`` index pair
+    then gathers probe and result columns into probe order with ``take``.
+    ``row_codes[i]`` is the position in ``results`` of probe row i's key."""
+    key_names = list(cfg.key_lookup_names)
+    fields = list(cfg.output_lookup_fields)
+    fits = ["decimal(" in f.dataType.simpleString() for f in fields]
+    meta_fields = [f for name in cfg.meta_names
+                   for f in METADATA_FIELDS if f.name == name]
+    lookup_values: List[List[Any]] = [[] for _ in fields]
+    meta_values: List[List[Any]] = [[] for _ in meta_fields]
+    counts = []
+    for kt, result in results.items():
         rows = result.rows
         if not rows:
-            if not emit_on_empty:
-                continue
-            rows = [None]  # one null-enrichment row
+            rows = [None] if cfg.emit_on_empty else []  # one null-enrichment row
+        counts.append(len(rows))
         for row in rows:
-            for name in probe_col_names:
-                out_cols[name].append(probe_values[name][i])
-            for f in output_lookup_fields:
-                name = f"{lookup_prefix}{f.name}"
+            for f, fit, values in zip(fields, fits, lookup_values):
                 if row is None:
-                    out_cols[name].append(None)
+                    values.append(None)
                     continue
                 value = _coerce(row.get(f.name), f.dataType)
                 # join-key backfill: null result key ← probe value
-                if value is None and f.name in key_lookup_names:
-                    idx = key_lookup_names.index(f.name)
-                    value = row_keys[i][idx]
-                out_cols[name].append(value)
-            if meta_fields:
-                meta_map = {
-                    "error-string": result.error_string,
-                    "http-status-code": result.status_code,
-                    "http-headers": dict(result.headers) if result.headers else None,
-                    "http-completion-state": result.completion_state.value,
-                }
-                for mname in meta_names:
-                    out_cols[f"{lookup_prefix}{mname}"].append(meta_map[mname])
+                if value is None and f.name in key_names:
+                    value = kt[key_names.index(f.name)]
+                values.append(_fit_decimals(value, f.dataType) if fit else value)
+        if meta_fields:
+            meta = {
+                "error-string": result.error_string,
+                "http-status-code": result.status_code,
+                "http-headers": dict(result.headers) if result.headers else None,
+                "http-completion-state": result.completion_state.value,
+            }
+            for f, values in zip(meta_fields, meta_values):
+                values.extend([meta[f.name]] * len(rows))
 
-    out = pd.DataFrame(
-        {name: pd.Series(values, dtype="object")
-         for name, values in out_cols.items()}
+    # probe row i repeats once per row of its key's block, in block order
+    count = np.asarray(counts, dtype=np.int64)
+    start = np.cumsum(count) - count
+    code = np.asarray(row_codes, dtype=np.int64)
+    repeats = count[code]
+    probe_idx = np.repeat(np.arange(len(code)), repeats)
+    out_start = np.cumsum(repeats) - repeats
+    result_idx = (
+        np.repeat(start[code] - out_start, repeats) + np.arange(len(probe_idx))
     )
-    return out
+    probe = batch if (repeats == 1).all() else batch.take(probe_idx)
+    columns = [probe.column(name) for name in cfg.probe_col_names]
+    columns += [
+        pa.array(values, type=to_arrow_type(f.dataType)).take(result_idx)
+        for f, values in zip(fields + meta_fields, lookup_values + meta_values)
+    ]
+    return pa.RecordBatch.from_arrays(columns, names=list(cfg.out_col_names))
 
 
 def http_lookup_join(
@@ -679,24 +726,23 @@ def http_lookup_join(
         probe_col_names=tuple(probe_col_names),
         output_lookup_fields=tuple(output_lookup_fields),
         out_col_names=tuple(f.name for f in out_fields),
-        lookup_prefix=lookup_prefix,
         key_lookup_names=tuple(key_lookup_names),
         meta_names=tuple(meta_names),
         emit_on_empty=emit_on_empty,
     )
 
-    def enrich(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def enrich(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         client = _client_for(cfg.table)
         cache: Optional[LruTtlCache] = None
         if cfg.table.options.cache is not None:
             cache = shared_cache(cfg.table.fingerprint(), cfg.table.options.cache)
-        for pdf in batches:
+        for batch in batches:
             out = _enrich_pdf(
-                cfg, client, cache, pdf, calls_acc.add, cache_hits_acc.add
+                cfg, client, cache, batch, calls_acc.add, cache_hits_acc.add
             )
-            if out is None or len(out) == 0:
+            if out is None or out.num_rows == 0:
                 continue
-            rows_acc.add(len(out))
+            rows_acc.add(out.num_rows)
             yield out
 
 
@@ -716,4 +762,4 @@ def http_lookup_join(
         "numCacheHits": cache_hits_acc,
         "numRowsEmitted": rows_acc,
     }
-    return probe.mapInPandas(enrich, schema=out_schema)
+    return probe.mapInArrow(enrich, schema=out_schema)

@@ -8,7 +8,7 @@ testing idea as the reference's WireMock-backed MiniCluster ITCases
 (``HttpLookupTableSourceITCaseTest.java:162-205``), lifted into the
 hash-compared gate.
 
-Scale note: the lookup join stays a narrow ``mapInPandas`` stage — no
+Scale note: the lookup join stays a narrow ``mapInArrow`` stage — no
 shuffle, per-batch distinct-key dedup, thread-pooled requests, optional
 per-executor cache — exactly the shape that survives a 1000-executor
 fan-out (each executor talks to the service independently; request volume
@@ -896,7 +896,7 @@ def http_datasource_stream_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="STREAMING flagship: the processing-time temporal lookup join "
         "(T1, `FOR SYSTEM_TIME AS OF proc_time`) under the oracle gate — "
         "the probe side arrives as a Structured Streaming micro-batch and "
-        "http_enrich_stream runs the identical narrow mapInPandas lookup "
+        "http_enrich_stream runs the identical narrow mapInArrow lookup "
         "per batch. Same endpoint, options, and output contract as the "
         "batch flagship, so the relational join oracle checks both paths.",
 )
@@ -1075,7 +1075,7 @@ def http_sql_udtf_lookup_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier JOIN nation ON n_nationkey = s_nationkey
     """,
     doc="SQL-driven lookup join, fully vectorized: SQL derives the "
-        "DISTINCT probe keys (JVM), the Arrow mapInPandas lookup fetches "
+        "DISTINCT probe keys (JVM), the Arrow mapInArrow lookup fetches "
         "one request per distinct key, and SQL joins the enrichment view "
         "back onto the probe (broadcast — the distinct-key side is tiny). "
         "This replaces the row-at-a-time http_get_json LATERAL spelling "
@@ -1339,7 +1339,7 @@ def http_sink_idempotent_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Streaming temporal join through the MULTI-KEY batch lookup: the "
         "micro-batch probe's distinct keys ride 50-per-POST (the "
         "beyond-reference request-batching path) inside the same narrow "
-        "per-batch mapInPandas — proves the scale feature composes with "
+        "per-batch mapInArrow — proves the scale feature composes with "
         "Structured Streaming unchanged. Same output contract and oracle "
         "as http_stream_enrich, so the gate pins batch-mode and per-key "
         "streaming enrichment to identical results.",

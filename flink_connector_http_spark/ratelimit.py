@@ -12,7 +12,7 @@ client and the sink writer.
 Semantics: a token bucket holding at most ``burst`` permits, refilled at
 ``rate`` permits/second. :meth:`TokenBucket.acquire` blocks the calling
 worker thread until a permit is available, so backpressure propagates
-naturally — into the ``mapInPandas`` batch on the lookup side and into
+naturally — into the ``mapInArrow`` batch on the lookup side and into
 the writer pool on the sink side — instead of queueing unbounded work.
 
 The bound is **per task**: a job running N concurrent tasks against the

@@ -90,6 +90,8 @@ def register_http_sql_functions(spark) -> None:
 # ---------------------------------------------------------------------------
 
 _FLUSH_ROWS = 1024
+#: name of the buffer-position column the UDTF's enrichment batches carry
+_ROW_INDEX = "__http_lookup_row"
 
 _DDL_SCALARS = {
     "boolean": "BooleanType",
@@ -513,18 +515,20 @@ class HttpLookupUdtf:
         self._client = None
         self._cache = None
         self._rows = []
-        self._probe_names = None
+        self._key_roots = None
+        self._out_struct = None
 
     def _configure(self, row, kwargs) -> None:
         from .cache import LookupCacheConfig, shared_cache
         from .lookup import HttpLookupTable, _client_for, _EnrichConfig
         from .options import HttpLookupOptions
+        from .types import metadata_schema
 
-        self._probe_names = list(row.__fields__)
+        probe_names = list(row.__fields__)
         from pyspark.sql import types as T
 
         probe_struct = T.StructType(
-            [T.StructField(n, T.StringType(), True) for n in self._probe_names]
+            [T.StructField(n, T.StringType(), True) for n in probe_names]
         )  # field TYPES are irrelevant to planning — names drive it
         plan = _udtf_plan(
             probe_struct=probe_struct,
@@ -566,18 +570,23 @@ class HttpLookupUdtf:
             options=options,
         )
         pairs = plan["pairs"]  # ordered (probe, lookup) — already expanded
-        out_col_names = (
-            list(self._probe_names)
-            + [f"{prefix}{f.name}" for f in plan["output_lookup_fields"]]
-            + [f"{prefix}{m}" for m in plan["meta_names"]]
+        # the enrichment batch carries only the key root columns plus each
+        # row's buffer position (the one probe column it emits); _flush
+        # rebuilds the output rows from the buffered probe rows
+        roots = list(dict.fromkeys(pc.split(".")[0] for pc, _ in pairs))
+        self._key_roots = [(r, probe_names.index(r)) for r in roots]
+        self._out_struct = T.StructType(
+            [T.StructField(_ROW_INDEX, T.LongType())]
+            + [T.StructField(f"{prefix}{f.name}", f.dataType)
+               for f in plan["output_lookup_fields"]
+               + list(metadata_schema(plan["meta_names"]).fields)]
         )
         self._cfg = _EnrichConfig(
             table=table,
             pairs=tuple(pairs),
-            probe_col_names=tuple(self._probe_names),
+            probe_col_names=(_ROW_INDEX,),
             output_lookup_fields=tuple(plan["output_lookup_fields"]),
-            out_col_names=tuple(out_col_names),
-            lookup_prefix=prefix,
+            out_col_names=tuple(self._out_struct.fieldNames()),
             key_lookup_names=tuple(lk for _, lk in pairs),
             meta_names=tuple(plan["meta_names"]),
             emit_on_empty=(how == "left" or bool(plan["meta_names"])),
@@ -589,24 +598,29 @@ class HttpLookupUdtf:
     def _flush(self):
         if not self._rows:
             return
-        import pandas as pd
+        import pyarrow as pa
+        from pyspark.sql import Row
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
 
         from .lookup import _enrich_pdf
 
-        pdf = pd.DataFrame(
-            {
-                name: pd.Series(
-                    [r[i] for r in self._rows], dtype="object"
-                )
-                for i, name in enumerate(self._probe_names)
-            }
-        )
-        self._rows = []
-        out = _enrich_pdf(self._cfg, self._client, self._cache, pdf)
-        if out is None or len(out) == 0:
+        rows, self._rows = self._rows, []
+        columns = {
+            name: pa.array([
+                r[i].asDict(recursive=True) if isinstance(r[i], Row) else r[i]
+                for r in rows
+            ])
+            for name, i in self._key_roots
+        }
+        columns[_ROW_INDEX] = pa.array(range(len(rows)), type=pa.int64())
+        out = _enrich_pdf(self._cfg, self._client, self._cache,
+                          pa.RecordBatch.from_pydict(columns))
+        if out is None:
             return
-        for tup in out.itertuples(index=False, name=None):
-            yield tup
+        for i, *values in ArrowTableToRowsConversion.convert(
+            pa.Table.from_batches([out]), self._out_struct, return_as_tuples=True
+        ):
+            yield rows[i] + tuple(values)
 
     def eval(self, row, **kwargs):  # noqa: D102 — UDTF contract
         if self._cfg is None:

@@ -5,7 +5,7 @@ Spark-first:
 
 * **T1 processing-time temporal join** (``JOIN Customers FOR SYSTEM_TIME AS OF
   o.proc_time`` — docs/.../table/http.md:116-119,226-228): a micro-batch
-  ``mapInPandas`` lookup *is* processing-time semantics by construction — each
+  ``mapInArrow`` lookup *is* processing-time semantics by construction — each
   micro-batch probes the endpoint at execution time, exactly like Flink's
   proctime lookup join. :func:`http_enrich_stream` is the streaming entry; it
   delegates to the same narrow (shuffle-free) operator used in batch.
@@ -134,7 +134,7 @@ def http_enrich_stream(
     """Processing-time temporal lookup join on a streaming DataFrame (T1).
 
     Identical semantics and options to :func:`http_lookup_join` — the
-    operator is a single ``mapInPandas`` stage, which Structured Streaming
+    operator is a single ``mapInArrow`` stage, which Structured Streaming
     executes per micro-batch, giving ``FOR SYSTEM_TIME AS OF proc_time``
     behavior (reference ``HttpTableLookupFunction.java:102-197``).
     """

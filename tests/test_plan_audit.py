@@ -2,43 +2,46 @@
 
 The two canned plans below are one query — a grouped count (hash
 exchange), ordered by the count (range exchange), unioned with a global
-count (SinglePartition exchange) — printed by Spark 3.5 in tree format
-(``executedPlan().toString()``) and in ``explain('formatted')`` format.
+count (SinglePartition exchange), then fed to ``mapInArrow`` — printed
+in tree format (``executedPlan().toString()``) and in
+``explain('formatted')`` format.
 """
 
 from tools.plan_audit import digest, digest_formatted
 
 TREE_PLAN = """\
-Union
-:- *(3) Sort [n#2L ASC NULLS FIRST], true, 0
-:  +- Exchange rangepartitioning(n#2L ASC NULLS FIRST, 4), ENSURE_REQUIREMENTS, [plan_id=50]
-:     +- *(2) HashAggregate(keys=[k#1L], functions=[count(1)], output=[k#1L, n#2L])
-:        +- Exchange hashpartitioning(k#1L, 4), ENSURE_REQUIREMENTS, [plan_id=46]
-:           +- *(1) HashAggregate(keys=[k#1L], functions=[partial_count(1)], output=[k#1L, count#14L])
-:              +- *(1) Project [(id#0L % 7) AS k#1L]
-:                 +- *(1) Range (0, 100, step=1, splits=4)
-+- *(5) HashAggregate(keys=[], functions=[count(1)], output=[k#10L, n#6L])
-   +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=55]
-      +- *(4) HashAggregate(keys=[], functions=[partial_count(1)], output=[count#16L])
-         +- *(4) Project
-            +- *(4) Range (0, 100, step=1, splits=4)
+MapInArrow enrich(k#1L, n#2L)#17, [k#18L, n#19L], false
++- Union
+   :- *(3) Sort [n#2L ASC NULLS FIRST], true, 0
+   :  +- Exchange rangepartitioning(n#2L ASC NULLS FIRST, 4), ENSURE_REQUIREMENTS, [plan_id=50]
+   :     +- *(2) HashAggregate(keys=[k#1L], functions=[count(1)], output=[k#1L, n#2L])
+   :        +- Exchange hashpartitioning(k#1L, 4), ENSURE_REQUIREMENTS, [plan_id=46]
+   :           +- *(1) HashAggregate(keys=[k#1L], functions=[partial_count(1)], output=[k#1L, count#14L])
+   :              +- *(1) Project [(id#0L % 7) AS k#1L]
+   :                 +- *(1) Range (0, 100, step=1, splits=4)
+   +- *(5) HashAggregate(keys=[], functions=[count(1)], output=[k#10L, n#6L])
+      +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=55]
+         +- *(4) HashAggregate(keys=[], functions=[partial_count(1)], output=[count#16L])
+            +- *(4) Project
+               +- *(4) Range (0, 100, step=1, splits=4)
 """
 
 FORMATTED_PLAN = """\
 == Physical Plan ==
-Union (13)
-:- * Sort (7)
-:  +- Exchange (6)
-:     +- * HashAggregate (5)
-:        +- Exchange (4)
-:           +- * HashAggregate (3)
-:              +- * Project (2)
-:                 +- * Range (1)
-+- * HashAggregate (12)
-   +- Exchange (11)
-      +- * HashAggregate (10)
-         +- * Project (9)
-            +- * Range (8)
+MapInArrow (14)
++- Union (13)
+   :- * Sort (7)
+   :  +- Exchange (6)
+   :     +- * HashAggregate (5)
+   :        +- Exchange (4)
+   :           +- * HashAggregate (3)
+   :              +- * Project (2)
+   :                 +- * Range (1)
+   +- * HashAggregate (12)
+      +- Exchange (11)
+         +- * HashAggregate (10)
+            +- * Project (9)
+               +- * Range (8)
 
 
 (1) Range [codegen id : 1]
@@ -102,6 +105,10 @@ Aggregate Attributes [1]: [count(1)#9L]
 Results [2]: [0 AS k#10L, count(1)#9L AS n#6L]
 
 (13) Union
+
+(14) MapInArrow
+Input [2]: [k#1L, n#2L]
+Arguments: enrich(k#1L, n#2L)#17, [k#18L, n#19L], false
 """
 
 
@@ -113,6 +120,7 @@ def test_tree_and_formatted_digests_agree():
     assert tree["exchanges"] == 2
     assert tree["single_partition_exchanges"] == 1
     assert tree["codegen_stages"] == 5
+    assert tree["python_stages"] == 1  # the MapInArrow node
 
 
 def test_formatted_exchange_tolerates_lines_before_arguments():

@@ -69,7 +69,7 @@ def tree_digest(jplan) -> dict:
             counters["shuffled_hash_joins"] += 1
         elif cls.startswith("CartesianProduct"):
             counters["cartesian"] += 1
-        elif cls.startswith(("MapInPandas", "ArrowEvalPython",
+        elif cls.startswith(("MapInPandas", "MapInArrow", "ArrowEvalPython",
                              "FlatMapGroupsInPandas", "BatchEvalPython")):
             counters["python_stages"] += 1
         ch = node.children()
@@ -101,7 +101,7 @@ def digest(plan: str) -> dict:
         "codegen_stages": len(set(re.findall(r"\*\((\d+)\)", plan))),
         "pushed_filters": len(re.findall(r"PushedFilters: \[[^\]]", plan)),
         "python_stages": len(re.findall(
-            r"(?:MapInPandas|ArrowEvalPython"
+            r"(?:MapInPandas|MapInArrow|ArrowEvalPython"
             r"|FlatMapGroupsInPandas|BatchEvalPython)", plan)),
     }
 
@@ -137,7 +137,7 @@ def digest_formatted(txt: str) -> dict:
             set(re.findall(r"\[codegen id : (\d+)\]", txt))),
         "pushed_filters": len(re.findall(r"PushedFilters: \[[^\]]", txt)),
         "python_stages": len(re.findall(
-            r"\(\d+\) (?:MapInPandas|ArrowEvalPython"
+            r"\(\d+\) (?:MapInPandas|MapInArrow|ArrowEvalPython"
             r"|FlatMapGroupsInPandas|BatchEvalPython)", txt)),
     }
 
